@@ -160,12 +160,15 @@ object Curation {
     * [[SufCtx]] chars (the shuffle carries ≤ 64-byte keys, NEVER
     * unbounded suffix text), resolve the ≥ 64-char ties to FULL
     * suffix ranks by [[fullSuffixRanks]]' prefix doubling (work ∝
-    * still-tied duplicate mass per round, O(log L) rounds), total-order
-    * by (rk, doc_id, p) via [[Ranks.globalOrderScan]] (bucket = 3-char
-    * key prefix — monotone under the full-rank order because the rank
-    * order refines the bounded-key order), join rank r with r+1, take
-    * the bounded `prefix_len` of the 64-char keys, then EXTEND the
-    * saturated pairs (lcp = 64) by 64-char text-chunk probes until the
+    * still-tied duplicate mass per round, O(log L) rounds), then take
+    * the adjacent pairs with ONE window partitioned by the 3-char key
+    * prefix (bucket; monotone under the full-rank order because the
+    * rank order refines the bounded-key order) ordered by (rk0, rk,
+    * doc_id, p) — its leads are the in-bucket pairs, and a bucket-
+    * census Aggregate stitches each bucket's last row to the next
+    * bucket's first. The global rank is never materialized. Take the
+    * bounded `prefix_len` of the 64-char keys, then EXTEND the
+    * saturated pairs (lcp = 64) by 256-char text-chunk probes until the
     * first mismatching chunk — each round touches only the still-
     * saturated pairs (∝ long-repeat mass, never corpus-proportional),
     * and the chunk walk is exact: a partial chunk match ends the LCP
@@ -265,25 +268,25 @@ object Curation {
           expr("prefix_len(sk, bsk)").as("lcp"))
       // cross-bucket pairs at bucket-census grain: buckets partition
       // the global order into contiguous ranges, so the i-th bucket's
-      // LAST row is adjacent to the (i+1)-th bucket's FIRST row. Order
-      // both census frames by rk0 (distinct across buckets: a last and
-      // a first in different buckets sit in different tie blocks) and
-      // join on the bucket ordinal — the global no-partition windows
-      // sort only #buckets rows, the globalOrderScan offset-table
-      // pattern.
-      val lasts = withLead.filter(col("bsk").isNull)
-        .select(col("doc_id").as("a_doc"), col("p").as("a_pos"),
-          col("sk").as("ask"), col("rk0"))
-        .withColumn("i", row_number().over(Window.orderBy(col("rk0"))))
-        .drop("rk0")
-      val firsts = withLead.filter(col("rn") === 1)
-        .select(col("doc_id").as("b_doc"), col("p").as("b_pos"),
-          col("sk").as("bsk"), col("rk0"))
-        .withColumn("i", row_number().over(Window.orderBy(col("rk0"))) - 1)
-        .drop("rk0")
-      val boundary = lasts.join(firsts, Seq("i"))
-        .select(col("a_doc"), col("a_pos"), col("b_doc"), col("b_pos"),
-          col("ask"), expr("prefix_len(ask, bsk)").as("lcp"))
+      // LAST row is adjacent to the (i+1)-th bucket's FIRST row. The
+      // census is a real Aggregate — one row per bucket carrying its
+      // last (bsk null) and first (rn = 1) rows — so the partitionless
+      // lead above it provably sorts only #buckets rows, and the plan
+      // sweeps resolve that grain from the plan rather than from the
+      // data. Ordering buckets by their first row's rk0 (distinct
+      // across buckets: different buckets hold different tie blocks)
+      // is ordering them by position in the global order.
+      val census = withLead.filter(col("bsk").isNull || col("rn") === 1)
+        .groupBy(bkt)
+        .agg(
+          max(when(col("bsk").isNull, struct(col("doc_id"), col("p"), col("sk")))).as("lst"),
+          max(when(col("rn") === 1,
+            struct(col("doc_id"), col("p"), col("sk"), col("rk0")))).as("fst"))
+        .withColumn("nxt", lead(col("fst"), 1).over(Window.orderBy(col("fst.rk0"))))
+      val boundary = census.filter(col("nxt").isNotNull)
+        .select(col("lst.doc_id").as("a_doc"), col("lst.p").as("a_pos"),
+          col("nxt.doc_id").as("b_doc"), col("nxt.p").as("b_pos"),
+          col("lst.sk").as("ask"), expr("prefix_len(lst.sk, nxt.sk)").as("lcp"))
       val base = inBucket.unionByName(boundary)
         .ckpt() // split into done/saturated, each read per round
       // unbounded-LCP extension: walk 64-char text chunks past the key

@@ -132,10 +132,10 @@ class SuffixDupSpec extends SparkSpec {
   }
 
   test("plan audit: the suffix scan's data-grain window partitions by bucket") {
-    // The memoized suffixPairs producer localCheckpoints its scan, so
-    // the mechanical Round12 sweep cannot see inside it (the
-    // documented limitation) — this is its targeted audit: rebuild
-    // the same pipeline un-checkpointed and assert every Window over
+    // The checkpointed suffixPairs producers are swept by Round12
+    // through PlanStash; this is the targeted audit of the
+    // Ranks.globalOrderScan that fullSuffixRanks runs for its base
+    // ranks: build it un-checkpointed and assert every Window over
     // base-grain rows is bucket-partitioned; the only partitionless
     // window sits above the bucket-census Aggregate.
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Window => LWindow}
