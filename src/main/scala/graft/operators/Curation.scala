@@ -193,9 +193,10 @@ object Curation {
 
   private[graft] def suffixPairs(s: SparkSession, d: String): DataFrame =
     // resolveProbed, not resolve: the cached frame is backed by
-    // localCheckpoint blocks, so a hit must be probed and healed on
-    // executor loss (the exactKnnL2 pattern) or q_suffix_dup /
-    // q_longest_repeat / q_copy_pairs all fail for the rest of the TTL
+    // localCheckpoint blocks, so a hit checks that the storage listing
+    // still holds them all and heals on executor loss (the exactKnnL2
+    // pattern) or q_suffix_dup / q_longest_repeat / q_copy_pairs all
+    // fail for the rest of the TTL
     suffixPairCache.resolveProbed(s"${System.identityHashCode(s)}:$d") {
       graft.functions.VectorFunctions.register(s)
       val texts = spanCorpus(s, d)

@@ -356,8 +356,9 @@ object Graph {
 
   private[graft] def copurchaseEdges(s: SparkSession, d: String): DataFrame =
     // resolveProbed, not resolve: the cached frame is backed by
-    // localCheckpoint blocks, so a hit must be probed and healed on
-    // executor loss (the suffixPairs pattern)
+    // localCheckpoint blocks, so a hit checks that the storage listing
+    // still holds them all and heals on executor loss (the suffixPairs
+    // pattern)
     copurchaseEdgeCache.resolveProbed(s"${System.identityHashCode(s)}:$d") {
       graft.functions.VectorFunctions.register(s)
       Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey"))

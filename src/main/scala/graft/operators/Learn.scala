@@ -1490,10 +1490,7 @@ object Learn {
     "q_pq_search" -> ((s, d) => {
       val (books, codes) = fitPq(s, d, 1)
       // the query's 16-dim slices, for the per-subspace LUTs
-      val q0 = Tables.embeddings(s, d).filter(col("vec_id") === 0)
-        .select(expr(
-          "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 10000) AS BIGINT))").as("qv"))
-        .collect()(0).getSeq[Long](0).toArray
+      val q0 = SimSearch.queryVec(s, d).grid
       def lutExpr(i: Int): String = {
         val qSlice = q0.slice(i * Sub, (i + 1) * Sub)
         // LUT indexed BY CID, not by position in the surviving-codebook
@@ -1582,7 +1579,7 @@ object Learn {
       val (books, codes) = fitPqOn(resid, 1, resid.filter(col("vec_id") >= kCoarse))
       // probe: the query's nprobe nearest coarse cells — exact integer
       // arithmetic on the collected codebook (identical to the oracle's)
-      val q0 = qdf.filter(col("vec_id") === 0).collect()(0).getSeq[Long](1).toArray
+      val q0 = SimSearch.queryVec(s, d).grid
       def l2(a: Array[Long], b: Array[Long]): Long =
         a.indices.foldLeft(0L) { (acc, i) => val x = a(i) - b(i); acc + x * x }
       val probes = coarse.map { case (cid, cv) => (cid, l2(q0, cv)) }
@@ -2011,8 +2008,7 @@ object Learn {
         val arr = cv.mkString("array(", "L,", "L)")
         s"aggregate(zip_with(qv, $arr, (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)"
       }
-      val seed = q.filter(col("vec_id") === 0).head()
-      var sel = Vector((0L, seed.getSeq[Long](1).toArray, 0L)) // (id, qv, far_d2)
+      var sel = Vector((0L, SimSearch.queryVec(s, d).grid, 0L)) // (id, qv, far_d2)
       for (_ <- 1 until K) {
         val ds = sel.map(c => dExpr(c._2))
         val dmin = if (ds.size == 1) ds.head else ds.mkString("least(", ", ", ")")
@@ -2642,7 +2638,8 @@ object Learn {
     // the IVF family; Bench's memoized flag marks the cache-hit reads.
     //
     // Cache-HIT validation: the index is localCheckpointed, so a hit
-    // must be probed and healed on lost blocks — see
+    // checks that the storage listing still holds every checkpoint
+    // block (no job) and heals on lost blocks — see
     // CachedRelation.resolveProbed (Round11Spec kills the blocks and
     // pins the rebuild through this path).
     knnCache.resolveProbed(knnKey(s, d, k))(exactKnnL2Build(s, d, k))

@@ -1692,7 +1692,8 @@ object TextAnalysis {
 
   private[graft] def bpeTrainedAll(s: SparkSession, d: String): DataFrame =
     // resolveProbed: the cached frame is localCheckpoint-backed, so a
-    // hit is probed and healed on block loss (the suffixPairs pattern)
+    // hit checks the storage listing for its blocks and heals on block
+    // loss (the suffixPairs pattern)
     bpeCache.resolveProbed(s"${System.identityHashCode(s)}:$d") {
       val (merges, words) = bpeLoop(s, d)
       // materialize the FINAL word table first (one eager checkpoint):

@@ -255,7 +255,8 @@ class Round14Spec extends SparkSpec {
       () => graft.operators.SimSearch.hnswEmbCache.buildCount,
       () => graft.operators.SimSearch.insertPicksCache.buildCount,
       () => graft.operators.SimSearch.staleCoarseMemo.buildCount,
-      () => graft.operators.SimSearch.refitCoarseMemo.buildCount
+      () => graft.operators.SimSearch.refitCoarseMemo.buildCount,
+      () => graft.operators.SimSearch.queryVecMemo.buildCount
     )
     def builds() = counters.map(_()).sum
     for ((name, fn) <- Producers.all.toSeq.sortBy(_._1)

@@ -227,4 +227,17 @@ class SimSearchSpec extends SparkSpec {
     assert(rows.last.getAs[Long]("reached") == 1L,
       "beam search no longer reaches the true NN on the fixture")
   }
+
+  test("warm serve calls plan their result without running a Spark job") {
+    // the query-vector memo, the coarse codebook and the kNN index are
+    // resolved on the first call; after that, building a consumer's
+    // DataFrame must run nothing — its own result job is the only one
+    val names = Seq("q_simsearch_ivf", "q_simsearch_native", "q_simsearch",
+      "q_mrl_recall", "q_ood_knn")
+    names.foreach(n => SparkEntry.queries(n)(spark, sf).collect())
+    names.foreach { n =>
+      val (_, jobs) = jobsIn(SparkEntry.queries(n)(spark, sf))
+      assert(jobs === 0, s"$n ran $jobs Spark job(s) before its own result job")
+    }
+  }
 }

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.SpecBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -7,6 +11,24 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sf: String = "/root/testdata/sf0.001"
+
+  /** `body`'s result and the Spark jobs it started, counted by a
+    * listener between two drains of the listener bus (so no earlier
+    * job's events land in the count, and none of `body`'s are missed). */
+  def jobsIn[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    SpecBus.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      val r = body
+      SpecBus.drain(sc)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(l)
+  }
 }
 
 object SparkSpec {
