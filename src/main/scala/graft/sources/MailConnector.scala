@@ -5,6 +5,7 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.collection.mutable.{ArrayBuffer, Queue => MQueue}
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -25,10 +26,15 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Read path — mirrors the paginated Gmail scan (reference:
   * etl_service/main.py:163-210):
-  *  - one `InputPartition` per page of `pageSize` (default 500, the
-  *    reference's maxResults at main.py:168) — pages are independent,
-  *    so a 1000-executor cluster reads them all concurrently instead
-  *    of the reference's sequential cursor loop;
+  *  - pages of `pageSize` ids (default 500, the reference's
+  *    maxResults at main.py:168) are packed into a few contiguous,
+  *    page-aligned ranges per account — `min(pages, ceil(P /
+  *    accounts))` of them, P = the context's default parallelism, the
+  *    figure Spark's own file-split packing starts from. Each range is
+  *    one `InputPartition` whose reader walks its pages in order, one
+  *    LIST per page, like the reference's cursor loop inside one
+  *    token's worker; the ranges read concurrently, so every core has
+  *    a range to read and no task pays its fixed cost for one page;
   *  - `SupportsPushDownFilters`: folder predicates are accepted,
   *    translated to Gmail `q` syntax ("in:inbox -in:spam", the
   *    main.py:160 algebra) — visible in `.explain` as PushedFilters
@@ -48,15 +54,18 @@ import org.apache.spark.unsafe.types.UTF8String
   *    the thread pool instead of raising): the message is skipped and
   *    counted — surfaced both as a DSv2 custom metric
   *    ("skippedMessages", visible in the SQL UI) and in [[MailMetrics]]
-  *    for tests;
+  *    for tests. The scan also reports the pages it listed
+  *    ("listPages") and the batched gets it sent ("batchGets") as
+  *    custom metrics, since a partition is no longer one page;
   *  - `tokens=name:state,…` models the reference's credential handling
   *    (main.py:132-140, :149-155): each account's token is `valid`,
   *    `expired_refresh` (refreshed inside reader open — the
   *    creds.refresh(Request()) path) or `expired_dead` (no refresh
   *    token: the account is dropped at planning time and counted,
-  *    mirroring download_token's None return). With tokens present the
-  *    scan is (account × page) partitioned — the Spark form of the
-  *    reference's per-token ThreadPoolExecutor fan-out (main.py:219).
+  *    mirroring download_token's None return). With tokens present
+  *    each live account gets its own page ranges — the Spark form of
+  *    the reference's per-token ThreadPoolExecutor fan-out
+  *    (main.py:219).
   *
   * Write path — mirrors the batched BigQuery sink (main.py:231-254):
   *  - rows buffered and flushed in `batchSize` chunks (default 1000,
@@ -341,10 +350,11 @@ class MailScanBuilder(conf: MailReadConf)
   override def build(): Scan = new MailScan(conf, accepted, required)
 }
 
-/** One page of the paginated scan: [start, end) of the id space,
-  * optionally owned by one account of the `tokens=` roster.
+/** A contiguous run of pages of the paginated scan: [start, end) of
+  * the id space with `start` on a page boundary, optionally owned by
+  * one account of the `tokens=` roster.
   */
-case class MailPage(start: Long, end: Long, account: String) extends InputPartition
+case class MailPageRange(start: Long, end: Long, account: String) extends InputPartition
 
 /** Streaming offset = number of pages fully consumed — exactly the
   * reference's `nextPageToken` cursor (main.py:208-210) made explicit.
@@ -380,13 +390,25 @@ class MailScan(conf: MailReadConf, filters: Array[Filter], required: StructType)
   override def toBatch: Batch = this
 
   override def supportedCustomMetrics(): Array[CustomMetric] =
-    Array(new SkippedMessagesMetric)
+    Array(new SkippedMessagesMetric, new ListPagesMetric, new BatchGetsMetric)
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val pages = (0L until conf.nmsgs by conf.pageSize.toLong)
-      .map(s => (s, math.min(s + conf.pageSize, conf.nmsgs)))
-    val accounts: Seq[String] = if (conf.tokens.isEmpty) Seq(null) else liveAccounts
-    (for { a <- accounts; (s, e) <- pages } yield MailPage(s, e, a): InputPartition).toArray
+  override def planInputPartitions(): Array[InputPartition] =
+    packPages(if (conf.tokens.isEmpty) Seq(null) else liveAccounts, 0L, totalPages)
+
+  /** The one planning rule of batch and micro-batch reads: pages
+    * [fromPage, toPage) of each account split into `min(pages, ceil(P /
+    * accounts))` contiguous, page-aligned ranges whose page counts
+    * differ by at most one. P is the default parallelism, so the plan
+    * has about one range per core and never more partitions than pages.
+    */
+  private def packPages(accounts: Seq[String], fromPage: Long, toPage: Long): Array[InputPartition] = {
+    val pages = toPage - fromPage
+    if (accounts.isEmpty || pages <= 0) return Array.empty
+    val p = SparkSession.active.sparkContext.defaultParallelism
+    val ranges = math.min(pages, (p + accounts.size - 1) / accounts.size)
+    def bound(i: Long): Long = math.min((fromPage + pages * i / ranges) * conf.pageSize, conf.nmsgs)
+    (for { a <- accounts; i <- 0L until ranges }
+      yield MailPageRange(bound(i), bound(i + 1), a): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -396,18 +418,16 @@ class MailScan(conf: MailReadConf, filters: Array[Filter], required: StructType)
     * protocol (main.py:163-210): offset = page cursor;
     * `maxPagesPerTrigger` is the declarative form of its fixed 0.5 s
     * inter-page throttle (rate limiting by admission control instead
-    * of sleeps). Within a trigger, that batch's pages still read
-    * concurrently — one InputPartition per page. (Streaming reads are
-    * single-account: the `tokens` roster applies to batch scans.)
+    * of sleeps). Within a trigger, that batch's pages are packed into
+    * page ranges by the same rule as a batch scan and the ranges read
+    * concurrently. (Streaming reads are single-account: the `tokens`
+    * roster applies to batch scans.)
     */
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new MailMicroBatchStream(this)
 
   private[sources] def pagesBetween(fromPage: Long, toPage: Long): Array[InputPartition] =
-    (fromPage until toPage).map { p =>
-      val s = p * conf.pageSize
-      MailPage(s, math.min(s + conf.pageSize, conf.nmsgs), null): InputPartition
-    }.toArray
+    packPages(Seq(null), fromPage, toPage)
 
   private[sources] def cappedEnd(fromPage: Long): Long =
     math.min(fromPage + conf.maxPagesPerTrigger, totalPages)
@@ -422,9 +442,18 @@ class SkippedMessagesMetric extends CustomSumMetric {
   override def description(): String = "messages skipped by failed batched get"
 }
 
-case class SkippedMessagesTaskMetric(value: Long) extends CustomTaskMetric {
-  override def name(): String = "skippedMessages"
+class ListPagesMetric extends CustomSumMetric {
+  override def name(): String = "listPages"
+  override def description(): String = "pages listed, one LIST call each"
 }
+
+class BatchGetsMetric extends CustomSumMetric {
+  override def name(): String = "batchGets"
+  override def description(): String = "batched get calls of up to 50 ids"
+}
+
+/** A reader's running value of one of the scan's sum metrics. */
+case class MailTaskMetric(name: String, value: Long) extends CustomTaskMetric
 
 class MailMicroBatchStream(scan: MailScan)
     extends MicroBatchStream with SupportsAdmissionControl {
@@ -460,13 +489,13 @@ class MailReaderFactory(fields: Array[String], filters: Array[Filter], conf: Mai
     extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val page = partition.asInstanceOf[MailPage]
+    val range = partition.asInstanceOf[MailPageRange]
     val tests = filters.flatMap(MailTransport.compile)
 
     // Reader open = credential use (main.py:149-155): an expired-but-
     // refreshable token is refreshed before the first request. Dead
     // tokens never reach here — they were dropped at planning.
-    conf.tokens.find(_.account == page.account).foreach { cred =>
+    conf.tokens.find(_.account == range.account).foreach { cred =>
       cred match {
         case MailTransport.Credential(a, MailTransport.ExpiredRefreshable) =>
           MailMetrics.recordRefresh(conf.runId, a)
@@ -493,54 +522,64 @@ class MailReaderFactory(fields: Array[String], filters: Array[Filter], conf: Mai
 
     def row(docId: Long): InternalRow =
       new GenericInternalRow(fields.map {
-        case "account" => UTF8String.fromString(page.account)
+        case "account" => UTF8String.fromString(range.account)
         case f         => MailTransport.fieldOf(f, docId)
       }.toArray[Any])
+
+    // The range's pages in cursor order (main.py:163-210); each LIST
+    // returns the page's ids already server-filtered by the pushed `q`.
+    var listed = 0L
+    val pages: Iterator[IndexedSeq[Long]] =
+      (range.start until range.end by conf.pageSize.toLong).iterator.map { s =>
+        listed += 1
+        (s until math.min(s + conf.pageSize, range.end)).filter(id => tests.forall(_(id)))
+      }
 
     if (!conf.enrich) {
       // Single-phase: the list response already carries the metadata.
       new PartitionReader[InternalRow] {
-        private var cur = page.start - 1
-        override def next(): Boolean = {
-          cur += 1
-          while (cur < page.end && !tests.forall(_(cur))) cur += 1
-          cur < page.end
-        }
+        private val ids = pages.flatten
+        private var cur = -1L
+        override def next(): Boolean = ids.hasNext && { cur = ids.next(); true }
         override def get(): InternalRow = row(cur)
+        override def currentMetricsValues(): Array[CustomTaskMetric] =
+          Array(MailTaskMetric("listPages", listed))
         override def close(): Unit = ()
       }
     } else {
-      // Two-phase (main.py:177-191): the page LIST yields ids (already
-      // server-filtered by the pushed `q`); the chunk-of-50 batched GET
-      // materializes metadata, per-message errors returned as values
-      // and skipped — a bad message never fails its chunk, its page,
-      // or the job.
+      // Two-phase (main.py:177-191): each page's LIST yields ids; the
+      // chunk-of-50 batched GET over that page's ids materializes
+      // metadata, per-message errors returned as values and skipped —
+      // a bad message never fails its chunk, its page, or the job.
       //
       // Chunks are fetched through a bounded pool of `fetchPool`
       // in-flight requests (default 5 — the reference's
       // ThreadPoolExecutor(max_workers=5) inside each batch,
       // main.py:219-229), hiding per-request wire latency behind the
-      // row consumer. Results are consumed in submission order, so the
-      // reader's output order (and therefore everything downstream) is
+      // row consumer; the window runs on across page boundaries.
+      // Results are consumed in submission order, so the reader's
+      // output order (and therefore everything downstream) is
       // identical to the serial form. At cluster scale this is
       // per-task I/O concurrency: 1000 tasks × 5 in-flight requests,
       // each task's memory bounded by pool × chunk rows.
       new PartitionReader[InternalRow] {
-        private val ids = (page.start until page.end).filter(id => tests.forall(_(id)))
-        private val chunkIter = ids.grouped(MailTransport.GetBatch)
+        private val chunkIter = pages.flatMap(_.grouped(MailTransport.GetBatch))
         private val pool: Option[java.util.concurrent.ExecutorService] =
-          if (conf.fetchPool > 1 && ids.length > MailTransport.GetBatch)
+          if (conf.fetchPool > 1 && range.end - range.start > MailTransport.GetBatch)
             Some(java.util.concurrent.Executors.newFixedThreadPool(conf.fetchPool))
           else None
         private val inFlight =
           MQueue.empty[java.util.concurrent.Future[Seq[Either[String, Long]]]]
         private val pending = MQueue.empty[InternalRow]
+        private var gets = 0L
         private var skipped = 0L
+
+        private def nextChunk(): Seq[Long] = { gets += 1; chunkIter.next() }
 
         /** Keep the request window full: ≤ fetchPool chunks on the wire. */
         private def refill(): Unit = pool.foreach { es =>
           while (inFlight.size < conf.fetchPool && chunkIter.hasNext) {
-            val chunk = chunkIter.next()
+            val chunk = nextChunk()
             inFlight.enqueue(es.submit(new java.util.concurrent.Callable[Seq[Either[String, Long]]] {
               override def call(): Seq[Either[String, Long]] =
                 MailTransport.batchGet(chunk, conf.errorEvery, conf.errorOffset)
@@ -553,7 +592,7 @@ class MailReaderFactory(fields: Array[String], filters: Array[Filter], conf: Mai
             refill()
             val results =
               if (pool.isDefined) inFlight.dequeue().get()
-              else MailTransport.batchGet(chunkIter.next(), conf.errorEvery, conf.errorOffset)
+              else MailTransport.batchGet(nextChunk(), conf.errorEvery, conf.errorOffset)
             refill() // re-arm the window before draining rows
             results.foreach {
               case Left(_)      => skipped += 1
@@ -563,8 +602,9 @@ class MailReaderFactory(fields: Array[String], filters: Array[Filter], conf: Mai
           pending.nonEmpty
         }
         override def get(): InternalRow = pending.dequeue()
-        override def currentMetricsValues(): Array[CustomTaskMetric] =
-          Array(SkippedMessagesTaskMetric(skipped))
+        override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
+          MailTaskMetric("skippedMessages", skipped), MailTaskMetric("listPages", listed),
+          MailTaskMetric("batchGets", gets))
         override def close(): Unit = {
           pool.foreach(_.shutdownNow())
           MailMetrics.addSkipped(conf.runId, skipped)

@@ -2,8 +2,10 @@ package graft
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
-import graft.sources.{MailClock, MailMetrics, MailQueries, MailSink, Pacer}
+import graft.sources.{MailClock, MailMetrics, MailPageRange, MailQueries, MailSink, MailTransport, Pacer}
 
 class MailConnectorSpec extends SparkSpec {
   import spark.implicits._
@@ -12,9 +14,42 @@ class MailConnectorSpec extends SparkSpec {
     spark.read.format("graft.sources.MailSourceProvider")
       .option("nmsgs", n).option("pageSize", page).load()
 
+  private def scanOf(df: DataFrame): BatchScanExec =
+    df.queryExecution.executedPlan.collectFirst { case b: BatchScanExec => b }.get
+
   test("reads exactly nmsgs rows across page partitions") {
     assert(mail(1234, page = 100).count() === 1234)
-    assert(mail(1234, page = 100).rdd.getNumPartitions === 13) // ceil(1234/100)
+    // 13 pages packed into min(13, ceil(4 cores / 1 account)) ranges
+    assert(mail(1234, page = 100).rdd.getNumPartitions === 4)
+  }
+
+  test("page ranges tile each account's id space: page-aligned, contiguous, disjoint") {
+    val p = spark.sparkContext.defaultParallelism
+    def ranges(n: Long, page: Int, tokens: Option[String]): Map[String, Seq[MailPageRange]] = {
+      val r = spark.read.format("graft.sources.MailSourceProvider")
+        .option("nmsgs", n).option("pageSize", page)
+      scanOf(tokens.fold(r)(r.option("tokens", _)).load())
+        .inputPartitions.map(_.asInstanceOf[MailPageRange]).groupBy(_.account)
+    }
+    for {
+      (n, page, tokens, accounts) <- Seq(
+        (1234L, 100, None, 1),
+        (1234L, 100, Some("a:valid,b:expired_refresh,c:valid,d:expired_dead"), 3),
+        (150L, 100, None, 1),
+        (5000L, 500, Some("a:valid,b:valid"), 2))
+    } {
+      val byAccount = ranges(n, page, tokens)
+      val pages = (n + page - 1) / page
+      val want = math.min(pages, (p + accounts - 1) / accounts)
+      assert(byAccount.size === accounts, s"accounts of $tokens")
+      byAccount.foreach { case (a, rs) =>
+        val sorted = rs.sortBy(_.start)
+        assert(sorted.size === want, s"$a: ${sorted.size} ranges for $pages pages at P=$p")
+        assert(sorted.head.start === 0L && sorted.last.end === n, s"$a: $sorted")
+        assert(sorted.forall(r => r.start % page == 0 && r.start < r.end), s"$a: $sorted")
+        sorted.zip(sorted.tail).foreach { case (x, y) => assert(x.end === y.start, s"$a: $sorted") }
+      }
+    }
   }
 
   test("folder predicate is pushed: no Spark-side Filter, q= in scan description") {
@@ -132,6 +167,51 @@ class MailConnectorSpec extends SparkSpec {
     } finally graft.sources.MailTransport.onBatchGet = _ => ()
   }
 
+  test("page ranges keep per-page batch gets and skips: 3 live + 1 dead accounts") {
+    // The bench's shape: a folder-filtered enriched read over several
+    // accounts. Every page still lists and batch-gets on its own, so
+    // the GET count is the per-page closed form, not a per-range one:
+    // a 170-id page keeps 102 ids = 3 gets, two pages 204 ids = 5 gets.
+    val (n, page) = (2345L, 170)
+    val calls = new java.util.concurrent.atomic.AtomicLong(0L)
+    MailTransport.onBatchGet = _ => calls.incrementAndGet()
+    try {
+      MailMetrics.clear("t_ranges")
+      val got = spark.read.format("graft.sources.MailSourceProvider")
+        .option("nmsgs", n).option("pageSize", page)
+        .option("enrich", true).option("errorEvery", 97).option("errorOffset", 13)
+        .option("tokens", "a:valid,b:expired_refresh,c:valid,d:expired_dead")
+        .option("runId", "t_ranges").load()
+        .filter($"folder".isin("INBOX", "SENT", "TRASH"))
+        .select("account", "doc_id").as[(String, Long)].collect().toSet
+      val kept = (0L until n).filter(_ % 5 < 3)
+      val want = for { a <- Set("a", "b", "c"); id <- kept if id % 97 != 13 } yield (a, id)
+      assert(got === want)
+      val perAccount = kept.groupBy(_ / page).values.map(ids => (ids.size + 49) / 50).sum
+      assert(calls.get === 3L * perAccount)
+      assert(MailMetrics.skipped("t_ranges") === 3L * kept.count(_ % 97 == 13))
+      assert(MailMetrics.dead("t_ranges") === Set("d"))
+    } finally MailTransport.onBatchGet = _ => ()
+  }
+
+  test("scan reports listPages and batchGets as custom metrics") {
+    // 1000 ids in pages of 100; SENT keeps 20 ids a page = 1 chunk each
+    val enriched = spark.read.format("graft.sources.MailSourceProvider")
+      .option("nmsgs", 1000).option("pageSize", 100).option("enrich", true)
+      .option("errorEvery", 50).option("errorOffset", 1).load()
+      .filter($"folder" === "SENT")
+    assert(enriched.collect().length === 180)
+    val m = scanOf(enriched).metrics
+    assert(m("listPages").value === 10)
+    assert(m("batchGets").value === 10)
+    assert(m("skippedMessages").value === 20)
+    // single-phase reads list the same pages and send no get
+    val listed = mail(1234, page = 100)
+    assert(listed.collect().length === 1234)
+    assert(scanOf(listed).metrics("listPages").value === 13)
+    assert(scanOf(listed).metrics("batchGets").value === 0)
+  }
+
   test("token roster: valid reads, expired-refreshable refreshes, dead dropped and counted") {
     MailMetrics.clear("t_tok")
     val df = spark.read.format("graft.sources.MailSourceProvider")
@@ -157,7 +237,8 @@ class MailConnectorSpec extends SparkSpec {
       .option("runId", "t_tmpfile").load()
     assert(df.count() === 200)
     val files = MailMetrics.tempFiles("t_tmpfile")
-    // 2 live accounts × 2 pages = 4 reader opens, each with its own file
+    // 2 live accounts × min(2 pages, ceil(4 cores / 2)) ranges = 4
+    // reader opens, each with its own file
     assert(files.size === 4, s"expected 4 temp credentials, saw ${files.keySet}")
     files.foreach { case (path, cleanedWhileLive) =>
       assert(cleanedWhileLive === Some(true),
