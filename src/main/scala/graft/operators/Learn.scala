@@ -207,26 +207,8 @@ object Learn {
   // ---------------------------------------------------------------
   // q_kmeans_fit — Lloyd's k-means TRAINING over the embedding corpus
   // (k = 4, 2 full assign+update iterations, then the final
-  // assignment). SemDeDup / IVF consume a codebook; this op FITS one.
-  //
-  // Exactness recipe: embeddings quantize once to 1e-4 grid BIGINTs
-  // (float→double→*10000→floor is bit-identical in both engines), so
-  // squared distances are exact integer sums; centroid updates are
-  // floor(sum/count) (Math.floorDiv here, floor(double division) in
-  // the oracle — equal because |sum| < 2^53 and the true quotient is
-  // ≥ 1/count away from any other integer); argmin ties break to the
-  // lowest centroid id. A cluster that receives no points drops out
-  // (the lazy-deletion rule, stated so both engines agree).
-  //
-  // Scale posture — the MLlib pattern, spelled out: each iteration is
-  // (a) a MAP-ONLY assignment against k·dim centroid literals (what a
-  // broadcast variable compiles to at this size), and (b) one
-  // partial+final aggregation of per-dimension sums — k·dim rows to
-  // the driver (256 here; codebook-scale like SimSearch's collects,
-  // NOT data-scale). The iteration loop lives on the driver because
-  // each round's plan depends on the previous round's collected
-  // centroids — 100 TB of vectors stream through 2 scans + 2
-  // aggregations and nothing else.
+  // assignment). SemDeDup / IVF consume a codebook; this op FITS one,
+  // through the one trainer every codebook shares ([[Lloyd]]).
   // ---------------------------------------------------------------
 
   private val K = 4
@@ -268,6 +250,57 @@ object Learn {
       .withColumn("cluster", element_at(cidLit,
         array_position(col("__darr"), col("qdist")).cast("int")))
       .drop("__darr")
+  }
+
+  /** The one Lloyd trainer behind every codebook: [[fitKMeans]]
+    * (q_kmeans_fit and the coarse IVF book), the stale and refit
+    * maintenance books, PQ's fused subspace books and q_doc_outlier's
+    * corpus centroid. Frames carry (vec_id, qs), qs the quantized
+    * vector.
+    *
+    * Exactness recipe: embeddings quantize once to 1e-4 grid BIGINTs
+    * ([[QuantTok]]: float→double→*10000→floor is bit-identical in both
+    * engines), so squared distances are exact integer sums; centroid
+    * updates are floor(sum/count) (Math.floorDiv here, floor(double
+    * division) in the oracles — equal because |sum| < 2^53 and the
+    * true quotient is ≥ 1/count away from any other integer); argmin
+    * ties break to the lowest centroid id ([[assign]]). A cluster that
+    * receives no points drops out (the lazy-deletion rule, stated so
+    * both engines agree).
+    *
+    * Scale posture — the MLlib pattern, spelled out: the init is one
+    * TakeOrdered, and each round is (a) a MAP-ONLY assignment against
+    * k·dim centroid literals (what a broadcast variable compiles to at
+    * this size) and (b) one partial+final aggregation of per-dimension
+    * sums — k·dim rows to the driver (codebook-scale, NOT data-scale).
+    * The loop lives on the driver because each round's plan depends
+    * on the previous round's collected centroids. */
+  private[operators] object Lloyd {
+    /** Init: the k lowest-vec_id vectors of `frame`, cid in vec_id order. */
+    def lowest(frame: DataFrame, k: Int): Seq[(Int, Array[Long])] =
+      frame.orderBy(col("vec_id")).limit(k).select(col("qs")).collect().toSeq
+        .zipWithIndex.map { case (r, cid) => (cid, r.getSeq[Long](0).toArray) }
+
+    /** One update over (cluster, pos, v) rows: per cluster, the
+      * floor(Σv / n) at every pos, cid-ascending. */
+    def update(rows: DataFrame): Seq[(Int, Array[Long])] =
+      rows.groupBy(col("cluster"), col("pos"))
+        .agg(sum(col("v")), count(lit(1)))
+        .collect() // k·dim rows — codebook-scale, never data-scale
+        .groupBy(_.getInt(0)).toSeq.sortBy(_._1).map { case (cid, rs) =>
+          val cv = new Array[Long](rs.map(_.getInt(1)).max + 1)
+          rs.foreach(r => cv(r.getInt(1)) = Math.floorDiv(r.getLong(2), r.getLong(3)))
+          (cid, cv)
+        }
+
+    /** `rounds` of assign-then-update from `init`; `by` is the
+      * assignment ([[assign]], or [[assignRouted]] for the refit book). */
+    def fit(frame: DataFrame, init: Seq[(Int, Array[Long])], rounds: Int,
+        by: (DataFrame, Seq[(Int, Array[Long])]) => DataFrame = assign)
+        : Seq[(Int, Array[Long])] =
+      (1 to rounds).foldLeft(init) { (cents, _) =>
+        update(by(frame, cents).select(col("cluster"), posexplode(col("qs")).as(Seq("pos", "v"))))
+      }
   }
 
   /** Two-level coarse ROUTING tables, trained over the cell centroids
@@ -1281,25 +1314,20 @@ object Learn {
 
     // Embedding outlier report — distance-to-centroid, the standard
     // training-data cleaning signal (mislabeled / out-of-distribution
-    // vectors sit far from the corpus mean). Centroid = per-dimension
-    // floorDiv(Σqv, n) over the 1e-4-quantized grid (floor(double
-    // division) in the oracle — equal while |Σ| < 2⁵³, the q_kmeans
+    // vectors sit far from the corpus mean). Centroid = one
+    // Lloyd.update with a single cluster (per-dimension floorDiv(Σqv,
+    // n) over the 1e-4-quantized grid, the trainer's exactness
     // argument), collected at CODEBOOK scale (64 rows) and folded into
     // the plan as a literal; each vector's squared distance is then
     // one exact-integer map-only expression feeding a top-20
     // TakeOrdered heap. Two scans, one 64-row aggregate, no shuffle of
     // vectors.
     "q_doc_outlier" -> ((s, d) => {
-      val quant =
-        "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 10000) AS BIGINT))"
       val qdf = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("label"), expr(quant).as("qv"))
-      val moments = qdf
-        .select(posexplode(col("qv")).as(Seq("j", "v")))
-        .groupBy(col("j")).agg(sum(col("v")).as("sv"), count(lit(1)).as("n"))
-        .collect().map(r => r.getInt(0) -> Math.floorDiv(r.getLong(1), r.getLong(2)))
-        .sortBy(_._1).map(_._2)
-      val clit = moments.mkString("array(", "L,", "L)")
+        .select(col("vec_id"), col("label"), expr(QuantTok).as("qv"))
+      val clit = Lloyd.update(qdf.select(lit(0).as("cluster"),
+          posexplode(col("qv")).as(Seq("pos", "v"))))
+        .flatMap(_._2).mkString("array(", "L,", "L)")
       qdf.withColumn("dist2", expr(
         s"aggregate(zip_with(qv, $clit, (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)"))
         .select(col("vec_id"), col("label"), col("dist2"))
@@ -1321,13 +1349,11 @@ object Learn {
     // codebook-sized (2080-row) result.
     "q_gram" -> ((s, d) => {
       graft.functions.VectorFunctions.register(s)
-      val quant =
-        "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 10000) AS BIGINT))"
       // consumed by the pair pass AND the dim-sum pass — deliberately
       // NOT persisted: the quantize is a map-only scan expression, so
       // re-running it is cheaper than materializing 64-long arrays to
       // the block store (measured)
-      val qdf = Tables.embeddings(s, d).select(expr(quant).as("qv"))
+      val qdf = Tables.embeddings(s, d).select(expr(QuantTok).as("qv"))
       // the first-moment sums are per-DIMENSION (64 values) — they
       // attach to the 2080 pair rows by two dim-key joins instead of
       // being re-aggregated once per pair (which would carry 2 extra
@@ -1427,9 +1453,7 @@ object Learn {
     // rescale constant (10⁶) is the knob that keeps z-sums in range as
     // row count grows.
     "q_pca_power" -> ((s, d) => {
-      val quant =
-        "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 10000) AS BIGINT))"
-      val qdf = Tables.embeddings(s, d).select(col("vec_id"), expr(quant).as("qv"))
+      val qdf = Tables.embeddings(s, d).select(col("vec_id"), expr(QuantTok).as("qv"))
       def fdiv(a: String, n: String) = s"(($a) - ((($a) % ($n) + ($n)) % ($n))) DIV ($n)"
       def zOf(v: IndexedSeq[Long]): DataFrame = {
         val varr = v.mkString("array(", "L,", "L)")
@@ -2293,8 +2317,7 @@ object Learn {
     // Row 5 reports the coverage radius (the would-be 5th selection).
     "q_kcenter" -> ((s, d) => {
       val base = Tables.embeddings(s, d)
-        .select(col("vec_id"), expr(
-          "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 10000) AS BIGINT))").as("qv"))
+        .select(col("vec_id"), expr(QuantTok).as("qv"))
         .ckpt() // 4 greedy rounds + the radius share one quantized scan
       val d2 = "aggregate(zip_with(qv, cqv, (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)"
       val c1 = base.orderBy(col("vec_id")).limit(1)
@@ -2722,23 +2745,6 @@ object Learn {
                          // not lineage, even after a catalog cache clear
   }
 
-  /** TRAINED IVF coarse codebook — Lloyd's k-means over the quantized
-    * embedding grid with k = [[coarseK]](n) (⌈√n⌉, floor 16 — the
-    * scale-aware IVF sizing; a constant K made exactKnnL2's pass-1
-    * home-cell join quadratic) and ONE update round from the
-    * k-lowest-vec_id init, replacing the old "first k vectors"
-    * codebook whose cell balance depended on data ORDER (k clumped
-    * early vectors → k near-identical centroids → one hot cell doing
-    * all the work; GraphLearnSpec pins the improvement on a skewed
-    * synthetic corpus). Same exact-integer recipe as q_kmeans_fit, so
-    * every consumer's oracle can replay the training trajectory
-    * CTE-for-CTE (with K itself recomputed from count(*) via
-    * [[CoarseKkCte]]). Memoized per data dir: the codebook is a
-    * deterministic pure function of the corpus (k·dim driver-side
-    * longs — codebook-scale, never data-scale), and the IVF family
-    * (q_simsearch_ivf, q_knn_label, q_dedup_embed, q_ivfpq_search)
-    * shares one training pass per session the way a production index
-    * trains once and serves many queries. */
   /** (vec_id, home) under the trained coarse codebook — exactKnnL2's
     * pass-1 bucketing, exposed for Round11Spec's occupancy census (the
     * per-cell candidate-mass bound on a skewed synthetic corpus). */
@@ -2756,20 +2762,37 @@ object Learn {
   private[graft] val coarseMemo =
     new TtlMemo[Seq[(Int, Array[Long])]](ttlMillis = 3600L * 1000)
 
+  /** TRAINED IVF coarse codebook — Lloyd's k-means over the quantized
+    * embedding grid with k = [[coarseK]](n) (⌈√n⌉, floor 16 — the
+    * scale-aware IVF sizing; a constant K made exactKnnL2's pass-1
+    * home-cell join quadratic) and ONE update round from the
+    * k-lowest-vec_id init, replacing the old "first k vectors"
+    * codebook whose cell balance depended on data ORDER (k clumped
+    * early vectors → k near-identical centroids → one hot cell doing
+    * all the work; GraphLearnSpec pins the improvement on a skewed
+    * synthetic corpus). Same [[Lloyd]] trainer as q_kmeans_fit, so
+    * every consumer's oracle can replay the training trajectory
+    * CTE-for-CTE (with K itself recomputed from count(*) via
+    * [[CoarseKkCte]]). Memoized per data dir: the codebook is a
+    * deterministic pure function of the corpus (k·dim driver-side
+    * longs — codebook-scale, never data-scale), and the IVF family
+    * (q_simsearch_ivf, q_knn_label, q_dedup_embed, q_ivfpq_search)
+    * shares one training pass per session the way a production index
+    * trains once and serves many queries. */
   def coarseCentroids(s: SparkSession, d: String): Seq[(Int, Array[Long])] =
     coarseMemo.resolve(clsKey(s, d)) {
-      fitKMeansSlice(s, d, iters = 1, start = 1, len = Dim,
-        k = coarseKOf(s, d))._1
+      fitKMeans(s, d, iters = 1, k = coarseKOf(s, d))._1
     }
 
   /** Product-quantization trainer: ALL subspaces per iteration in ONE
     * pass — assignment is a single map-only select computing every
     * subspace's code against its centroid literals, and the update is
-    * ONE posexplode aggregate keyed by (subspace, cluster, subpos)
-    * (256 rows to the driver). A per-subspace loop would scan the
-    * corpus m times per iteration; at 100 TB the scans ARE the cost,
-    * so the fused form is the only defensible plan (and it also makes
-    * encoding join-free: codes and distances come out of one select).
+    * ONE posexplode aggregate keyed by (subspace·K + cluster, subpos)
+    * (256 rows to the driver, folded by [[Lloyd.update]]). A
+    * per-subspace loop would scan the corpus m times per iteration; at
+    * 100 TB the scans ARE the cost, so the fused form is the only
+    * defensible plan (and it also makes encoding join-free: codes and
+    * distances come out of one select).
     */
   def fitPq(s: SparkSession, d: String, iters: Int): (Array[Seq[(Int, Array[Long])]], DataFrame) = {
     val qdf = Tables.embeddings(s, d).select(col("vec_id"), expr(QuantTok).as("qv"))
@@ -2786,11 +2809,9 @@ object Learn {
     */
   def fitPqOn(qdf: DataFrame, iters: Int,
               initDf: DataFrame): (Array[Seq[(Int, Array[Long])]], DataFrame) = {
-    val init = initDf.select(col("vec_id"), col("qv")).orderBy(col("vec_id")).limit(K).collect()
+    val init = Lloyd.lowest(initDf.select(col("vec_id"), col("qv").as("qs")), K)
     var books: Array[Seq[(Int, Array[Long])]] = (0 until M).map { i =>
-      init.zipWithIndex.map { case (r, cid) =>
-        (cid, r.getSeq[Long](1).slice(i * Sub, (i + 1) * Sub).toArray)
-      }.toSeq
+      init.map { case (cid, cv) => (cid, cv.slice(i * Sub, (i + 1) * Sub)) }
     }.toArray
 
     /** (input columns, c0..c3, d0..d3) — one map-only select. */
@@ -2809,60 +2830,31 @@ object Learn {
     }
 
     for (_ <- 1 to iters) {
-      val sums = encode()
+      // cluster key s·K + c: sorted keys are (subspace, cid) order
+      val byKey = Lloyd.update(encode()
         .select(col("qv"),
           array((0 until M).map(i => col(s"c$i")): _*).as("cs"))
         .select(posexplode(col("qv")).as(Seq("pos0", "v")), col("cs"))
-        .select(expr(s"CAST(pos0 DIV $Sub AS INT)").as("s"),
-          expr(s"element_at(cs, CAST(pos0 DIV $Sub AS INT) + 1)").as("cluster"),
-          expr(s"CAST(pos0 % $Sub AS INT)").as("subpos"), col("v"))
-        .groupBy(col("s"), col("cluster"), col("subpos"))
-        .agg(sum(col("v")).as("sm"), count(lit(1)).as("n"))
-        .collect() // m·k·sub rows — codebook-scale
+        .select(expr(s"CAST(pos0 DIV $Sub AS INT) * $K + " +
+            s"element_at(cs, CAST(pos0 DIV $Sub AS INT) + 1)").as("cluster"),
+          expr(s"CAST(pos0 % $Sub AS INT)").as("pos"), col("v")))
       books = (0 until M).map { i =>
-        sums.filter(_.getInt(0) == i).groupBy(_.getInt(1)).toSeq.sortBy(_._1)
-          .map { case (cid, rows) =>
-            val cv = new Array[Long](Sub)
-            rows.foreach(r => cv(r.getInt(2)) = Math.floorDiv(r.getLong(3), r.getLong(4)))
-            (cid, cv)
-          }
+        byKey.collect { case (key, cv) if key / K == i => (key % K, cv) }
       }.toArray
     }
     (books, encode()) // qv kept for spec-side argmin replay; queries select it away
   }
 
-  /** Lloyd's loop, exposed for spec-level invariants (monotone inertia,
-    * argmin consistency). Returns the trained centroids and the final
-    * assignment under them. */
-  def fitKMeans(s: SparkSession, d: String, iters: Int): (Seq[(Int, Array[Long])], DataFrame) =
-    fitKMeansSlice(s, d, iters, 1, Dim)
-
-  /** Lloyd's loop over dims [start, start+len) of the quantized
-    * vector — the full fit is the len = Dim special case; product
-    * quantization trains one per subspace, the IVF coarse codebook
-    * ([[coarseCentroids]]) passes k = [[coarseK]](n). */
-  def fitKMeansSlice(s: SparkSession, d: String, iters: Int,
-                     start: Int, len: Int, k: Int = K): (Seq[(Int, Array[Long])], DataFrame) = {
-    val qdf = Tables.embeddings(s, d).select(col("vec_id"), expr(
-      "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 10000) AS BIGINT))").as("qv"))
-      .withColumn("qs", expr(s"slice(qv, $start, $len)"))
-    // init: the k lowest-vec_id vectors, cid in vec_id order
-    var cents: Seq[(Int, Array[Long])] =
-      qdf.orderBy(col("vec_id")).limit(k).collect().zipWithIndex.map { case (r, i) =>
-        (i, r.getSeq[Long](r.fieldIndex("qs")).toArray)
-      }.toSeq
-    for (_ <- 1 to iters) {
-      val sums = assign(qdf, cents)
-        .select(col("cluster"), posexplode(col("qs")).as(Seq("pos", "v")))
-        .groupBy(col("cluster"), col("pos"))
-        .agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
-        .collect() // k·len rows — codebook-scale, never data-scale
-      cents = sums.groupBy(_.getInt(0)).toSeq.sortBy(_._1).map { case (cid, rows) =>
-        val cv = new Array[Long](len)
-        rows.foreach(r => cv(r.getInt(1)) = Math.floorDiv(r.getLong(2), r.getLong(3)))
-        (cid, cv)
-      }
-    }
+  /** Lloyd's loop over the quantized embeddings from the k lowest
+    * vec_ids ([[Lloyd]]), exposed for spec-level invariants (monotone
+    * inertia, argmin consistency); the IVF coarse codebook
+    * ([[coarseCentroids]]) passes k = [[coarseK]](n). Returns the
+    * trained centroids and the final assignment under them. */
+  def fitKMeans(s: SparkSession, d: String, iters: Int,
+                k: Int = K): (Seq[(Int, Array[Long])], DataFrame) = {
+    val qdf = Tables.embeddings(s, d).select(col("vec_id"), expr(QuantTok).as("qv"))
+      .withColumn("qs", col("qv"))
+    val cents = Lloyd.fit(qdf, Lloyd.lowest(qdf, k), iters)
     (cents, assign(qdf, cents))
   }
 

@@ -89,9 +89,9 @@ object SimSearch {
       .map(_.getSeq[Double](0).map(v => s"${v}D").mkString("array(", ",", ")"))
 
   /** STALE coarse codebook for the IVF maintenance page
-    * (q_ivf_maintain): Learn.coarseCentroids' exact recipe — K =
-    * coarseK(n), k-lowest-vec_id init, ONE Lloyd round with
-    * floorDiv updates — but trained over the PRE-ARRIVAL members
+    * (q_ivf_maintain): the shared [[Learn.Lloyd]] trainer with
+    * Learn.coarseCentroids' settings — K = coarseK(n), k-lowest-vec_id
+    * init, ONE round — but trained over the PRE-ARRIVAL members
     * only (vec_id ≢ 11 mod 23), so arrivals route into an index that
     * has never seen them, the state every production IVF tier is in
     * between retrains. Memoized per (session, dir) like the trained
@@ -102,23 +102,8 @@ object SimSearch {
   private[graft] def staleCoarseCentroids(s: SparkSession, d: String): Seq[(Int, Array[Long])] =
     staleCoarseMemo.resolve(Learn.clsKey(s, d)) {
       val qdf = Tables.embeddings(s, d).filter(col("vec_id") % 23 =!= 11)
-        .select(col("vec_id"), expr(Learn.QuantTok).as("qv"))
-        .withColumn("qs", col("qv"))
-      val k = Learn.coarseK(qdf.count())
-      val init: Seq[(Int, Array[Long])] =
-        qdf.orderBy(col("vec_id")).limit(k).collect().zipWithIndex.map { case (r, i) =>
-          (i, r.getSeq[Long](r.fieldIndex("qs")).toArray)
-        }.toSeq
-      val sums = Learn.assign(qdf, init)
-        .select(col("cluster"), posexplode(col("qs")).as(Seq("pos", "v")))
-        .groupBy(col("cluster"), col("pos"))
-        .agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
-        .collect() // k·dim rows — codebook-scale, never data-scale
-      sums.groupBy(_.getInt(0)).toSeq.sortBy(_._1).map { case (cid, rows) =>
-        val cv = new Array[Long](Learn.Dim)
-        rows.foreach(r => cv(r.getInt(1)) = Math.floorDiv(r.getLong(2), r.getLong(3)))
-        (cid, cv)
-      }
+        .select(col("vec_id"), expr(Learn.QuantTok).as("qs"))
+      Learn.Lloyd.fit(qdf, Learn.Lloyd.lowest(qdf, Learn.coarseK(qdf.count())), 1)
     }
 
   /** RE-ESTIMATED codebook: one Lloyd round of [[staleCoarseCentroids]]
@@ -131,20 +116,9 @@ object SimSearch {
     new TtlMemo[Seq[(Int, Array[Long])]](ttlMillis = 3600L * 1000)
   private[graft] def refitCoarseCentroids(s: SparkSession, d: String): Seq[(Int, Array[Long])] =
     refitCoarseMemo.resolve(Learn.clsKey(s, d)) {
-      val stale = staleCoarseCentroids(s, d)
-      val sums = Learn.assignRouted(
-          Tables.embeddings(s, d)
-            .select(col("vec_id"), expr(Learn.QuantTok).as("qs")),
-          stale)
-        .select(col("cluster"), posexplode(col("qs")).as(Seq("pos", "v")))
-        .groupBy(col("cluster"), col("pos"))
-        .agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
-        .collect() // k·dim rows — codebook-scale, never data-scale
-      sums.groupBy(_.getInt(0)).toSeq.sortBy(_._1).map { case (cid, rows) =>
-        val cv = new Array[Long](Learn.Dim)
-        rows.foreach(r => cv(r.getInt(1)) = Math.floorDiv(r.getLong(2), r.getLong(3)))
-        (cid, cv)
-      }
+      Learn.Lloyd.fit(
+        Tables.embeddings(s, d).select(col("vec_id"), expr(Learn.QuantTok).as("qs")),
+        staleCoarseCentroids(s, d), 1, Learn.assignRouted)
     }
 
   /** The IVF maintenance page behind q_ivf_maintain, parameterized by
@@ -173,9 +147,10 @@ object SimSearch {
       sum(col("is_new")).as("n_added"),
       sum(when(col("is_new") === 0L, col("qdist")).otherwise(0L)).as("dist_before"),
       sum(col("qdist")).as("dist_after"))
-    // ONE Lloyd update over the post-arrival membership (the
-    // trainer's floorDiv recipe), then displacement vs the stale
-    // centroid — the codebook frame is K driver-side rows
+    // ONE Lloyd update over the post-arrival membership (Learn.Lloyd's
+    // floor(Σ/n), kept declarative: the streaming twin feeds a
+    // different arrival set on each trigger), then displacement vs the
+    // stale centroid — the codebook frame is K driver-side rows
     val newC = asg
       .select(col("cell"), posexplode(col("qs")).as(Seq("pos", "v")))
       .groupBy(col("cell"), col("pos"))

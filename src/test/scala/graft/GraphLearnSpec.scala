@@ -69,7 +69,7 @@ class GraphLearnSpec extends SparkSpec {
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     def occupancy(iters: Int): (Long, Long) = {
-      val occ = Learn.fitKMeansSlice(spark, dir, iters, 1, dim, k = 16)._2
+      val occ = Learn.fitKMeans(spark, dir, iters, k = 16)._2
         .groupBy($"cluster").count().agg(max($"count"), min($"count")).head()
       (occ.getLong(0), occ.getLong(1))
     }
