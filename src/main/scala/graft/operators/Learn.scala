@@ -1,7 +1,10 @@
 package graft.operators
 
 import graft.operators.PlanStash.Ckpt
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -269,29 +272,52 @@ object Learn {
     * both engines agree).
     *
     * Scale posture — the MLlib pattern, spelled out: the init is one
-    * TakeOrdered, and each round is (a) a MAP-ONLY assignment against
-    * k·dim centroid literals (what a broadcast variable compiles to at
-    * this size) and (b) one partial+final aggregation of per-dimension
-    * sums — k·dim rows to the driver (codebook-scale, NOT data-scale).
+    * TakeOrdered, and each round is ONE job with no shuffle: a MAP-ONLY
+    * assignment against k·dim centroid literals (what a broadcast
+    * variable compiles to at this size) whose rows each partition
+    * folds into per-cluster vector sums and counts, so partitions ×
+    * k·dim longs reach the driver (codebook-scale, NOT data-scale).
     * The loop lives on the driver because each round's plan depends
     * on the previous round's collected centroids. */
-  private[operators] object Lloyd {
+  private[graft] object Lloyd {
     /** Init: the k lowest-vec_id vectors of `frame`, cid in vec_id order. */
     def lowest(frame: DataFrame, k: Int): Seq[(Int, Array[Long])] =
       frame.orderBy(col("vec_id")).limit(k).select(col("qs")).collect().toSeq
         .zipWithIndex.map { case (r, cid) => (cid, r.getSeq[Long](0).toArray) }
 
-    /** One update over (cluster, pos, v) rows: per cluster, the
-      * floor(Σv / n) at every pos, cid-ascending. */
-    def update(rows: DataFrame): Seq[(Int, Array[Long])] =
-      rows.groupBy(col("cluster"), col("pos"))
-        .agg(sum(col("v")), count(lit(1)))
-        .collect() // k·dim rows — codebook-scale, never data-scale
-        .groupBy(_.getInt(0)).toSeq.sortBy(_._1).map { case (cid, rs) =>
-          val cv = new Array[Long](rs.map(_.getInt(1)).max + 1)
-          rs.foreach(r => cv(r.getInt(1)) = Math.floorDiv(r.getLong(2), r.getLong(3)))
-          (cid, cv)
-        }
+    /** One update over (cluster INT, qs ARRAY<BIGINT>) rows: per
+      * cluster, floor(Σqs / n) at every position, cid-ascending. Each
+      * partition folds its rows into per-cluster sums with the member
+      * count in the last slot; the driver merges the partials as the
+      * tasks finish. Runs as one SQL execution named "lloyd.update". */
+    def update(rows: DataFrame): Seq[(Int, Array[Long])] = {
+      val qe = rows.select(col("cluster"), col("qs")).queryExecution
+      val sums = SQLExecution.withNewExecutionId(qe, Some("lloyd.update")) {
+        qe.toRdd.aggregate(mutable.HashMap.empty[Int, Array[Long]])(
+          (acc, r) => {
+            val qs = r.getArray(1)
+            val n = qs.numElements()
+            val s = acc.getOrElseUpdate(r.getInt(0), new Array[Long](n + 1))
+            var j = 0
+            while (j < n) { s(j) += qs.getLong(j); j += 1 }
+            s(n) += 1
+            acc
+          },
+          (a, b) => {
+            b.foreach { case (cid, sb) =>
+              a.get(cid) match {
+                case Some(sa) => sa.indices.foreach(j => sa(j) += sb(j))
+                case None => a(cid) = sb
+              }
+            }
+            a
+          })
+      }
+      sums.toSeq.sortBy(_._1).map { case (cid, s) =>
+        val n = s.length - 1
+        (cid, Array.tabulate(n)(j => Math.floorDiv(s(j), s(n))))
+      }
+    }
 
     /** `rounds` of assign-then-update from `init`; `by` is the
       * assignment ([[assign]], or [[assignRouted]] for the refit book). */
@@ -299,7 +325,7 @@ object Learn {
         by: (DataFrame, Seq[(Int, Array[Long])]) => DataFrame = assign)
         : Seq[(Int, Array[Long])] =
       (1 to rounds).foldLeft(init) { (cents, _) =>
-        update(by(frame, cents).select(col("cluster"), posexplode(col("qs")).as(Seq("pos", "v"))))
+        update(by(frame, cents))
       }
   }
 
@@ -1317,16 +1343,14 @@ object Learn {
     // vectors sit far from the corpus mean). Centroid = one
     // Lloyd.update with a single cluster (per-dimension floorDiv(Σqv,
     // n) over the 1e-4-quantized grid, the trainer's exactness
-    // argument), collected at CODEBOOK scale (64 rows) and folded into
-    // the plan as a literal; each vector's squared distance is then
-    // one exact-integer map-only expression feeding a top-20
-    // TakeOrdered heap. Two scans, one 64-row aggregate, no shuffle of
-    // vectors.
+    // argument), folded map-side to one 64-long sum per partition and
+    // put into the plan as a literal; each vector's squared distance
+    // is then one exact-integer map-only expression feeding a top-20
+    // TakeOrdered heap. Two scans, no shuffle.
     "q_doc_outlier" -> ((s, d) => {
       val qdf = Tables.embeddings(s, d)
         .select(col("vec_id"), col("label"), expr(QuantTok).as("qv"))
-      val clit = Lloyd.update(qdf.select(lit(0).as("cluster"),
-          posexplode(col("qv")).as(Seq("pos", "v"))))
+      val clit = Lloyd.update(qdf.select(lit(0).as("cluster"), col("qv").as("qs")))
         .flatMap(_._2).mkString("array(", "L,", "L)")
       qdf.withColumn("dist2", expr(
         s"aggregate(zip_with(qv, $clit, (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)"))
@@ -2787,8 +2811,9 @@ object Learn {
   /** Product-quantization trainer: ALL subspaces per iteration in ONE
     * pass — assignment is a single map-only select computing every
     * subspace's code against its centroid literals, and the update is
-    * ONE posexplode aggregate keyed by (subspace·K + cluster, subpos)
-    * (256 rows to the driver, folded by [[Lloyd.update]]). A
+    * ONE [[Lloyd.update]] fold over M rows per vector, each keyed
+    * subspace·K + cluster and carrying that subspace's slice (M·K
+    * sums of Sub longs per partition to the driver). A
     * per-subspace loop would scan the corpus m times per iteration; at
     * 100 TB the scans ARE the cost, so the fused form is the only
     * defensible plan (and it also makes encoding join-free: codes and
@@ -2830,14 +2855,12 @@ object Learn {
     }
 
     for (_ <- 1 to iters) {
-      // cluster key s·K + c: sorted keys are (subspace, cid) order
-      val byKey = Lloyd.update(encode()
-        .select(col("qv"),
-          array((0 until M).map(i => col(s"c$i")): _*).as("cs"))
-        .select(posexplode(col("qv")).as(Seq("pos0", "v")), col("cs"))
-        .select(expr(s"CAST(pos0 DIV $Sub AS INT) * $K + " +
-            s"element_at(cs, CAST(pos0 DIV $Sub AS INT) + 1)").as("cluster"),
-          expr(s"CAST(pos0 % $Sub AS INT)").as("pos"), col("v")))
+      // M rows per vector, (s·K + c, subspace s's slice): sorted keys
+      // are (subspace, cid) order
+      val byKey = Lloyd.update(encode().select(inline(array((0 until M).map { i =>
+        struct((lit(i * K) + col(s"c$i")).as("cluster"),
+          slice(col("qv"), i * Sub + 1, Sub).as("qs"))
+      }: _*))))
       books = (0 until M).map { i =>
         byKey.collect { case (key, cv) if key / K == i => (key % K, cv) }
       }.toArray
@@ -3832,7 +3855,7 @@ object Learn {
          |    GROUP BY a.cid, t.pos)
          |  GROUP BY cid),
          |${routedAssignCtes("vcell", "cc", "raw")},
-         |q AS (
+         |q AS MATERIALIZED (
          |  SELECT r.vec_id,
          |    list_transform(range(1, ${Dim + 1}), j -> r.qv[j] - cc.cv[j]) AS qv
          |  FROM raw r JOIN vcell v USING (vec_id) JOIN cc ON cc.cid = v.cell),

@@ -1,8 +1,13 @@
 package graft
 
 import java.nio.file.Paths
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.operators.{Learn, SimSearch}
 
 /** Codebook VALUES against a plain driver-side Lloyd replay over the
@@ -83,16 +88,60 @@ class CodebookSpec extends SparkSpec {
   }
 
   test("cold codebook builds run one init job plus one aggregate per round") {
-    // a collected aggregate is 2 jobs under AQE (shuffle map stage +
-    // result), the TakeOrdered init 1, the stale book's count 2
+    // a Lloyd round is 1 job (a map-side fold, no shuffle), the
+    // TakeOrdered init 1, the stale book's count 2 (partial + final)
     Learn.coarseKOf(spark, dir)
     val key = Learn.clsKey(spark, dir)
     Seq(Learn.coarseMemo, SimSearch.staleCoarseMemo, SimSearch.refitCoarseMemo)
       .foreach(_.invalidate(key))
-    assert(jobsIn(Learn.coarseCentroids(spark, dir))._2 === 1 + 2)
-    assert(jobsIn(SimSearch.staleCoarseCentroids(spark, dir))._2 === 2 + 1 + 2)
-    assert(jobsIn(SimSearch.refitCoarseCentroids(spark, dir))._2 === 2)
-    assert(jobsIn(Learn.fitKMeans(spark, dir, 2)._1)._2 === 1 + 2 * 2)
-    assert(jobsIn(Learn.fitPq(spark, dir, 1)._1)._2 === 1 + 2)
+    assert(jobsIn(Learn.coarseCentroids(spark, dir))._2 === 1 + 1)
+    assert(jobsIn(SimSearch.staleCoarseCentroids(spark, dir))._2 === 2 + 1 + 1)
+    assert(jobsIn(SimSearch.refitCoarseCentroids(spark, dir))._2 === 1)
+    assert(jobsIn(Learn.fitKMeans(spark, dir, 2)._1)._2 === 1 + 2)
+    assert(jobsIn(Learn.fitPq(spark, dir, 1)._1)._2 === 1 + 1)
+    // the producer's ledger row is one slice, so counting it needs no exchange
+    val row = Producers.all("producer:coarse_centroids")(spark, dir)
+    assert(row.rdd.getNumPartitions === 1)
+    assert(jobsIn(row.count())._2 === 1)
+  }
+
+  private def quantized = Tables.embeddings(spark, dir)
+    .select(col("vec_id"), expr(Learn.QuantTok).as("qs"))
+
+  test("Lloyd.fit's per-partition fold gives the same book over 7 partitions, some empty") {
+    val k = Learn.coarseK(vecs.size.toLong)
+    val parts = quantized.repartition(7, col("vec_id") % 5)
+    val sizes = parts.rdd.mapPartitions(it => Iterator(it.size)).collect()
+    assert(sizes.length === 7)
+    assert(sizes.contains(0))
+    assert(sizes.count(_ > 0) > 1)
+    val book = Learn.Lloyd.fit(parts, Learn.Lloyd.lowest(parts, k), 2)
+    assert(values(book) === values(lloyd(vecs, k, 2)))
+  }
+
+  test("each Lloyd round is one SQL execution named lloyd.update") {
+    val names = new ConcurrentLinkedQueue[String]()
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = names.add(f)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = names.add(f)
+    }
+    spark.listenerManager.register(l)
+    try {
+      jobsIn(Learn.fitKMeans(spark, dir, 2))
+      assert(names.asScala.count(_ == "lloyd.update") === 2)
+    } finally spark.listenerManager.unregister(l)
+  }
+
+  test("Lloyd.update of an empty frame is an empty book") {
+    val none = quantized.filter(col("vec_id") < 0).select(lit(0).as("cluster"), col("qs"))
+    assert(Learn.Lloyd.update(none).isEmpty)
+  }
+
+  test("a cluster that gets no members drops out of the update") {
+    // a copy of cid 0 as cid 4: every tie goes to cid 0, so cid 4 is empty
+    val init = lowest(vecs, 4) :+ ((4, vecs.head._2))
+    val book = Learn.Lloyd.fit(quantized, init, 1)
+    assert(book.map(_._1) === Seq(0, 1, 2, 3))
+    assert(values(book) === values(update(vecs.map { case (_, v) => (nearest(v, init), v) })))
   }
 }
