@@ -4,9 +4,12 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import graft.sources.PushKnownIds
 
 /** Shared contract for binary expressions over two same-typed numeric
   * arrays (array<float> or array<double>): type checking, element-type
@@ -443,20 +446,20 @@ object VectorFunctions {
   private val prefixLenBuilder: Seq[Expression] => Expression =
     exprs => PrefixLen(exprs(0), exprs(1))
 
+  /** The graft optimizer rules, installed alike by [[register]] and
+    * [[GraftExtensions]].
+    */
+  val optimizerRules: Seq[Rule[LogicalPlan]] =
+    Seq(RewriteDotProducts, RewriteBoundedLevenshtein, RewriteTokenCount, PushKnownIds)
+
   /** Idempotent registration on an existing session — functions plus
-    * the [[RewriteDotProducts]] optimizer rule — usable from any query
-    * lambda without rebuilding the session.
+    * the [[optimizerRules]] — usable from any query lambda without
+    * rebuilding the session.
     */
   def register(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraOptimizations.contains(RewriteDotProducts))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteDotProducts
-    if (!spark.experimental.extraOptimizations.contains(RewriteBoundedLevenshtein))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteBoundedLevenshtein
-    if (!spark.experimental.extraOptimizations.contains(RewriteTokenCount))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteTokenCount
+    val installed = spark.experimental.extraOptimizations
+    val missing = optimizerRules.filterNot(installed.contains)
+    if (missing.nonEmpty) spark.experimental.extraOptimizations = installed ++ missing
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "dot_product", dotBuilder, "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
@@ -500,7 +503,8 @@ object VectorFunctions {
   /** Session-extension wiring: sessions built with
     * `.withExtensions(new GraftExtensions)` (or
     * spark.sql.extensions=graft.functions.GraftExtensions) get the
-    * graft functions as first-class SQL functions.
+    * graft functions as first-class SQL functions, and the same
+    * [[optimizerRules]] as [[register]].
     */
   final class GraftExtensions extends (SparkSessionExtensions => Unit) {
     override def apply(e: SparkSessionExtensions): Unit = {
@@ -523,9 +527,7 @@ object VectorFunctions {
       e.injectFunction((FunctionIdentifier("token_count"), tokenCountInfo, tokenCountBuilder))
       e.injectFunction((FunctionIdentifier("jaro_winkler"), jaroWinklerInfo, jaroWinklerBuilder))
       e.injectFunction((FunctionIdentifier("prefix_len"), prefixLenInfo, prefixLenBuilder))
-      e.injectOptimizerRule(_ => RewriteDotProducts)
-      e.injectOptimizerRule(_ => RewriteBoundedLevenshtein)
-      e.injectOptimizerRule(_ => RewriteTokenCount)
+      optimizerRules.foreach(r => e.injectOptimizerRule(_ => r))
     }
   }
 }

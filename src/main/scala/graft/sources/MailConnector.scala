@@ -43,6 +43,15 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - `SupportsPushDownRequiredColumns`: mirrors the
   *    format="metadata" + metadataHeaders projection (main.py:181-186)
   *    — unrequested columns are never generated;
+  *  - already-landed ids are dropped between LIST and GET, as the
+  *    reference filters each listed page against the sink's
+  *    `existing_ids` before the detail fetch (main.py:175): the
+  *    [[PushKnownIds]] optimizer rule turns a `left_anti` join of the
+  *    scan against a driver-local relation into [[KnownIds]] carried by
+  *    the scan. Each page range receives only its own slice of them,
+  *    and its reader drops them from every listed page before chunking
+  *    — counted as the "knownIds" metric and shown as `known=<n>` in
+  *    the scan description;
   *  - `enrich=true` models the reference's TWO-phase read
   *    (main.py:177-191): the page scan lists message ids only; a
   *    second, chunk-of-50 batched "get" stage inside the
@@ -71,8 +80,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - rows buffered and flushed in `batchSize` chunks (default 1000,
   *    main.py:49/:240);
   *  - per-batch error isolation: a failing batch is dropped and
-  *    counted, later batches still land (main.py:244-250) — surfaced
-  *    in the commit messages as (inserted, failedBatches);
+  *    counted, later batches still land (main.py:244-250) — reported,
+  *    like the reference's per-run response (main.py:316-319), as the
+  *    write's "insertedRows", "sinkBatches" and "failedBatches"
+  *    metrics;
   *  - `maxBatchesPerSec` is the reference's 1 s inter-batch throttle
   *    (main.py:252-253) as a token-bucket [[Pacer]] — per writer task,
   *    like the reference's per-process sleep; clock and sleeper are
@@ -295,7 +306,8 @@ case class MailReadConf(
     if (tokens.nonEmpty) MailTransport.accountSchema else MailTransport.schema
 }
 
-class MailTable(props: Map[String, String]) extends Table with SupportsRead with SupportsWrite {
+class MailTable(props: Map[String, String], known: KnownIds = KnownIds.empty)
+    extends Table with SupportsRead with SupportsWrite {
   override def name(): String = "graft_mail"
   override def schema(): StructType =
     if (props.contains("tokens")) MailTransport.accountSchema else MailTransport.schema
@@ -313,7 +325,9 @@ class MailTable(props: Map[String, String]) extends Table with SupportsRead with
       options.getLong("errorOffset", 13L),
       Option(options.get("tokens")).map(MailTransport.parseTokens).getOrElse(Nil),
       options.getOrDefault("runId", "default"),
-      options.getInt("fetchPool", 5)))
+      options.getInt("fetchPool", 5)), known)
+
+  def withKnown(more: KnownIds): MailTable = new MailTable(props, known ++ more)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     val sink = info.options.getOrDefault("sink", "default")
@@ -324,12 +338,14 @@ class MailTable(props: Map[String, String]) extends Table with SupportsRead with
       override def build(): Write = new Write {
         override def toBatch: BatchWrite =
           new MailBatchWrite(sink, batchSize, maxBatchesPerSec, schema)
+        override def supportedCustomMetrics(): Array[CustomMetric] =
+          Array(new InsertedRowsMetric, new SinkBatchesMetric, new FailedBatchesMetric)
       }
     }
   }
 }
 
-class MailScanBuilder(conf: MailReadConf)
+class MailScanBuilder(conf: MailReadConf, known: KnownIds)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
 
   private var accepted: Array[Filter] = Array.empty
@@ -347,14 +363,16 @@ class MailScanBuilder(conf: MailReadConf)
   override def pushedFilters(): Array[Filter] = accepted
   override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
 
-  override def build(): Scan = new MailScan(conf, accepted, required)
+  override def build(): Scan = new MailScan(conf, accepted, required, known)
 }
 
 /** A contiguous run of pages of the paginated scan: [start, end) of
   * the id space with `start` on a page boundary, optionally owned by
-  * one account of the `tokens=` roster.
+  * one account of the `tokens=` roster, with the sorted already-landed
+  * doc ids inside it that its reader drops after LIST.
   */
-case class MailPageRange(start: Long, end: Long, account: String) extends InputPartition
+case class MailPageRange(start: Long, end: Long, account: String, known: Array[Long])
+    extends InputPartition
 
 /** Streaming offset = number of pages fully consumed — exactly the
   * reference's `nextPageToken` cursor (main.py:208-210) made explicit.
@@ -363,7 +381,7 @@ case class MailOffset(page: Long) extends Offset {
   override def json(): String = page.toString
 }
 
-class MailScan(conf: MailReadConf, filters: Array[Filter], required: StructType)
+class MailScan(conf: MailReadConf, filters: Array[Filter], required: StructType, known: KnownIds)
     extends Scan with Batch {
   private val totalPages = (conf.nmsgs + conf.pageSize - 1) / conf.pageSize
 
@@ -386,11 +404,15 @@ class MailScan(conf: MailReadConf, filters: Array[Filter], required: StructType)
     s"graft-mail nmsgs=${conf.nmsgs} pageSize=${conf.pageSize} " +
       s"q='${MailTransport.gmailQ(filters.toSeq)}' " +
       s"fields=${required.fieldNames.mkString(",")}" +
-      (if (conf.enrich) s" enrich=batchGet(${MailTransport.GetBatch})x${conf.fetchPool}" else "")
+      (if (conf.enrich) s" enrich=batchGet(${MailTransport.GetBatch})x${conf.fetchPool}" else "") +
+      (if (known.size > 0) s" known=${known.size}" else "")
   override def toBatch: Batch = this
 
+  /** This scan with more already-landed keys to drop after LIST. */
+  def withKnown(more: KnownIds): MailScan = new MailScan(conf, filters, required, known ++ more)
+
   override def supportedCustomMetrics(): Array[CustomMetric] =
-    Array(new SkippedMessagesMetric, new ListPagesMetric, new BatchGetsMetric)
+    Array(new SkippedMessagesMetric, new ListPagesMetric, new BatchGetsMetric, new KnownIdsMetric)
 
   override def planInputPartitions(): Array[InputPartition] =
     packPages(if (conf.tokens.isEmpty) Seq(null) else liveAccounts, 0L, totalPages)
@@ -408,7 +430,8 @@ class MailScan(conf: MailReadConf, filters: Array[Filter], required: StructType)
     val ranges = math.min(pages, (p + accounts.size - 1) / accounts.size)
     def bound(i: Long): Long = math.min((fromPage + pages * i / ranges) * conf.pageSize, conf.nmsgs)
     (for { a <- accounts; i <- 0L until ranges }
-      yield MailPageRange(bound(i), bound(i + 1), a): InputPartition).toArray
+      yield MailPageRange(bound(i), bound(i + 1), a, known.slice(a, bound(i), bound(i + 1))): InputPartition)
+      .toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -450,6 +473,26 @@ class ListPagesMetric extends CustomSumMetric {
 class BatchGetsMetric extends CustomSumMetric {
   override def name(): String = "batchGets"
   override def description(): String = "batched get calls of up to 50 ids"
+}
+
+class KnownIdsMetric extends CustomSumMetric {
+  override def name(): String = "knownIds"
+  override def description(): String = "listed ids dropped as already landed"
+}
+
+class InsertedRowsMetric extends CustomSumMetric {
+  override def name(): String = "insertedRows"
+  override def description(): String = "rows inserted into the sink"
+}
+
+class SinkBatchesMetric extends CustomSumMetric {
+  override def name(): String = "sinkBatches"
+  override def description(): String = "sink batches flushed, landed or failed"
+}
+
+class FailedBatchesMetric extends CustomSumMetric {
+  override def name(): String = "failedBatches"
+  override def description(): String = "sink batches rejected and dropped"
 }
 
 /** A reader's running value of one of the scan's sum metrics. */
@@ -527,12 +570,22 @@ class MailReaderFactory(fields: Array[String], filters: Array[Filter], conf: Mai
       }.toArray[Any])
 
     // The range's pages in cursor order (main.py:163-210); each LIST
-    // returns the page's ids already server-filtered by the pushed `q`.
+    // returns the page's ids already server-filtered by the pushed `q`,
+    // and the ids already landed are dropped before any GET
+    // (main.py:175). Ids ascend, so one cursor walks the sorted slice.
     var listed = 0L
+    var dropped = 0L
+    var k = 0
+    def fresh(id: Long): Boolean = {
+      while (k < range.known.length && range.known(k) < id) k += 1
+      val hit = k < range.known.length && range.known(k) == id
+      if (hit) dropped += 1
+      !hit
+    }
     val pages: Iterator[IndexedSeq[Long]] =
       (range.start until range.end by conf.pageSize.toLong).iterator.map { s =>
         listed += 1
-        (s until math.min(s + conf.pageSize, range.end)).filter(id => tests.forall(_(id)))
+        (s until math.min(s + conf.pageSize, range.end)).filter(id => tests.forall(_(id)) && fresh(id))
       }
 
     if (!conf.enrich) {
@@ -543,7 +596,7 @@ class MailReaderFactory(fields: Array[String], filters: Array[Filter], conf: Mai
         override def next(): Boolean = ids.hasNext && { cur = ids.next(); true }
         override def get(): InternalRow = row(cur)
         override def currentMetricsValues(): Array[CustomTaskMetric] =
-          Array(MailTaskMetric("listPages", listed))
+          Array(MailTaskMetric("listPages", listed), MailTaskMetric("knownIds", dropped))
         override def close(): Unit = ()
       }
     } else {
@@ -604,7 +657,7 @@ class MailReaderFactory(fields: Array[String], filters: Array[Filter], conf: Mai
         override def get(): InternalRow = pending.dequeue()
         override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
           MailTaskMetric("skippedMessages", skipped), MailTaskMetric("listPages", listed),
-          MailTaskMetric("batchGets", gets))
+          MailTaskMetric("batchGets", gets), MailTaskMetric("knownIds", dropped))
         override def close(): Unit = {
           pool.foreach(_.shutdownNow())
           MailMetrics.addSkipped(conf.runId, skipped)
@@ -642,6 +695,7 @@ class MailDataWriter(sink: String, batchSize: Int, maxBatchesPerSec: Double,
   private val idOrdinal = schema.fieldNames.indexOf("id")
   private val buf = new ArrayBuffer[Seq[String]](batchSize)
   private var inserted = 0L
+  private var batches = 0L
   private var failedBatches = 0L
   private val pacer: Option[Pacer] =
     if (maxBatchesPerSec > 0) Some(new Pacer(maxBatchesPerSec)) else None
@@ -655,6 +709,7 @@ class MailDataWriter(sink: String, batchSize: Int, maxBatchesPerSec: Double,
   private def flush(): Unit = {
     if (buf.nonEmpty) {
       pacer.foreach(_.acquire())
+      batches += 1
       try {
         // Fault injection for tests: a poison id fails its whole batch.
         if (idOrdinal >= 0 && buf.exists(r => r(idOrdinal) != null && r(idOrdinal).contains("poison")))
@@ -666,6 +721,18 @@ class MailDataWriter(sink: String, batchSize: Int, maxBatchesPerSec: Double,
       buf.clear()
     }
   }
+
+  /** Flushes the last partial batch once the input ends, so the task's
+    * final metrics update (made before `commit`) counts it.
+    */
+  override def writeAll(rows: java.util.Iterator[InternalRow]): Unit = {
+    while (rows.hasNext) write(rows.next())
+    flush()
+  }
+
+  override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
+    MailTaskMetric("insertedRows", inserted), MailTaskMetric("sinkBatches", batches),
+    MailTaskMetric("failedBatches", failedBatches))
 
   override def commit(): WriterCommitMessage = { flush(); MailCommit(inserted, failedBatches) }
   override def abort(): Unit = buf.clear()

@@ -1,11 +1,16 @@
 package graft
 
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.Join
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, V2TableWriteExec}
 import org.apache.spark.sql.functions._
-import graft.sources.{MailClock, MailMetrics, MailPageRange, MailQueries, MailSink, MailTransport, Pacer}
+import org.apache.spark.sql.util.QueryExecutionListener
+import graft.functions.VectorFunctions
+import graft.sources.{MailClock, MailMetrics, MailPageRange, MailQueries, MailSink, MailTransport, Pacer, PushKnownIds}
 
 class MailConnectorSpec extends SparkSpec {
   import spark.implicits._
@@ -311,6 +316,178 @@ class MailConnectorSpec extends SparkSpec {
     // folders cycle %5: INBOX/SENT/TRASH = ids ≡ 0,1,2 (mod 5);
     // anti-join removes doc_id < 500 → 300 of the 600 eligible remain
     assert(MailSink.inserted("e2e").size === 300)
+  }
+
+  // Known-id push-down (PushKnownIds): the bench's refetch shape — an
+  // enriched, folder-pushed read over 3 live + 1 dead accounts,
+  // anti-joined against the (account, id) keys the sink already holds.
+  private val provider = "graft.sources.MailSourceProvider"
+  private val (kn, kpage) = (2345L, 170)
+  private val roster = "a:valid,b:expired_refresh,c:valid,d:expired_dead"
+  private val live = Seq("a", "b", "c")
+  private val kept = (0L until kn).filter(_ % 5 < 3)
+  private def poison(d: Long) = d % 97 == 13
+  // every third id of a and every seventh of b have landed; none of c.
+  // Poison ids never land.
+  private val landed: Seq[(String, Long)] =
+    ((0L until kn by 3).map("a" -> _) ++ (0L until kn by 7).map("b" -> _)).filterNot(k => poison(k._2))
+
+  private def fetchRead(s: SparkSession = spark): DataFrame =
+    s.read.format(provider)
+      .option("nmsgs", kn).option("pageSize", kpage)
+      .option("enrich", true).option("errorEvery", 97).option("errorOffset", 13)
+      .option("tokens", roster).load()
+      .filter(col("folder").isin("INBOX", "SENT", "TRASH"))
+
+  private def landedLocal: DataFrame = landed.map { case (a, d) => (a, s"msg$d") }.toDF("account", "id")
+
+  /** The same keys, derived from `range`, so the right side is not a LocalRelation. */
+  private def landedRange: DataFrame = {
+    def keys(a: String, step: Long) = spark.range(0, kn, step).filter($"id" % 97 =!= 13)
+      .select(lit(a).as("account"), concat(lit("msg"), $"id").as("id"))
+    keys("a", 3).union(keys("b", 7))
+  }
+
+  private def joins(df: DataFrame): Int = df.queryExecution.optimizedPlan.collect { case j: Join => j }.size
+
+  private def accountDocs(rows: Array[Row]): Set[(String, Long)] =
+    rows.map(r => (r.getAs[String]("account"), r.getAs[Long]("doc_id"))).toSet
+
+  private def fresh(known: ((String, Long)) => Boolean): Set[(String, Long)] =
+    (for { a <- live; d <- kept if !poison(d) && !known((a, d)) } yield (a, d)).toSet
+
+  test("known-id push-down: a local anti-join lands the rows of the non-local one") {
+    VectorFunctions.register(spark)
+    def land(df: DataFrame, sink: String): Seq[String] = {
+      MailSink.clear(sink)
+      df.select(MailTransport.accountSchema.fieldNames.toSeq.map(col): _*).write.format(provider)
+        .option("sink", sink).option("tokens", roster).mode("append").save()
+      MailSink.inserted(sink).map(_.mkString("|")).sorted
+    }
+    val pushed = fetchRead().join(landedLocal, Seq("account", "id"), "left_anti")
+    val joined = fetchRead().join(landedRange, Seq("account", "id"), "left_anti")
+    assert(joins(pushed) === 0 && joins(joined) === 1)
+    val rows = land(pushed, "t_known_local")
+    assert(rows === land(joined, "t_known_range"))
+    assert(rows.size === fresh(landed.toSet).size)
+  }
+
+  test("known-id push-down: GETs are per-page ceil(fresh ids / 50), drops are counted") {
+    VectorFunctions.register(spark)
+    val known = landed.toSet
+    val df = fetchRead().join(landedLocal, Seq("account", "id"), "left_anti")
+    assert(accountDocs(df.collect()) === fresh(known))
+    val m = scanOf(df).metrics
+    val pages = kept.groupBy(_ / kpage).values.toSeq
+    val gets = for { a <- live; ids <- pages } yield (ids.count(d => !known((a, d))) + 49) / 50
+    assert(m("batchGets").value === gets.sum)
+    assert(m("knownIds").value === landed.count { case (_, d) => d % 5 < 3 })
+    // poison ids never land, so every one is still fetched and skipped
+    assert(m("skippedMessages").value === live.size * kept.count(poison))
+  }
+
+  test("known-id push-down: the optimized plan has no Join; the scan shows known=<n>") {
+    VectorFunctions.register(spark)
+    val df = fetchRead().join(landedLocal, Seq("account", "id"), "left_anti")
+    assert(joins(df) === 0, df.queryExecution.optimizedPlan.treeString)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains(s"known=${landed.size}"), plan)
+    // each range carries only its own account's ids inside [start, end)
+    scanOf(df).inputPartitions.map(_.asInstanceOf[MailPageRange]).foreach { r =>
+      val want = landed.collect { case (a, d) if a == r.account && d >= r.start && d < r.end => d }
+      assert(r.known.toSeq === want.sorted, r)
+    }
+  }
+
+  test("known-id push-down: the Join stays where the rewrite would not be exact") {
+    VectorFunctions.register(spark)
+    val src = fetchRead()
+    val local = landedLocal
+    val nonEqui = src.join(local, src("account") === local("account") && src("id") < local("id"), "left_anti")
+    val nondeterministic = fetchRead().filter(rand(7) < 0.5)
+      .join(landedLocal, Seq("account", "id"), "left_anti")
+    // thread_id renamed to id: the key is not the scan's own id column
+    val renamed = fetchRead().drop("id").withColumnRenamed("thread_id", "id")
+      .join(Seq(("a", "t3")).toDF("account", "id"), Seq("account", "id"), "left_anti")
+    val nonLocal = fetchRead().join(landedRange, Seq("account", "id"), "left_anti")
+    Seq(nonEqui, nondeterministic, renamed, nonLocal).foreach { df =>
+      assert(joins(df) === 1, df.queryExecution.optimizedPlan.treeString)
+    }
+    assert(accountDocs(renamed.collect()) === fresh { case (a, d) => a == "a" && d % 50 == 3 })
+  }
+
+  test("known-id push-down: null keys and ids not of the form msg<docId> drop nothing") {
+    VectorFunctions.register(spark)
+    val odd = Seq[(Option[String], Option[String])](
+      (Some("a"), None), (None, Some("msg5")), (Some("a"), Some("msg007")), (Some("a"), Some("foo")),
+      (Some("b"), Some("msg+6")), (Some("b"), Some("msg-0")), (Some("c"), Some("msg")), (Some("c"), Some("MSG1")))
+      .toDF("account", "id")
+    val df = fetchRead().join(odd, Seq("account", "id"), "left_anti")
+    assert(joins(df) === 0, df.queryExecution.optimizedPlan.treeString)
+    assert(accountDocs(df.collect()) === fresh(_ => false))
+    assert(scanOf(df).metrics("knownIds").value === 0)
+  }
+
+  test("known-id push-down: keys on id alone drop the id in every account") {
+    VectorFunctions.register(spark)
+    val ids = (0L until kn by 4).filterNot(poison)
+    val df = fetchRead().join(ids.map(d => s"msg$d").toDF("id"), Seq("id"), "left_anti")
+    assert(joins(df) === 0, df.queryExecution.optimizedPlan.treeString)
+    assert(accountDocs(df.collect()) === fresh { case (_, d) => d % 4 == 0 })
+    assert(scanOf(df).metrics("knownIds").value === live.size * ids.count(_ % 5 < 3))
+    // a second anti-join adds its keys to the first's
+    val both = df.join(Seq(("a", "msg1")).toDF("account", "id"), Seq("account", "id"), "left_anti")
+    assert(joins(both) === 0, both.queryExecution.optimizedPlan.treeString)
+    assert(accountDocs(both.collect()) === fresh { case (a, d) => d % 4 == 0 || (a, d) == (("a", 1L)) })
+  }
+
+  test("known-id push-down: a session built withExtensions(GraftExtensions) gets the same rewrite") {
+    val want = accountDocs(fetchRead().join(landedRange, Seq("account", "id"), "left_anti").collect())
+    val prevDefault = SparkSession.getDefaultSession
+    val prevActive = SparkSession.getActiveSession
+    SparkSession.clearDefaultSession()
+    SparkSession.clearActiveSession()
+    val ext = SparkSession.builder()
+      .master("local[4]")
+      .config("spark.ui.enabled", "false")
+      .withExtensions(new VectorFunctions.GraftExtensions)
+      .getOrCreate()
+    try {
+      assert(!ext.experimental.extraOptimizations.contains(PushKnownIds))
+      val local = ext.createDataFrame(landed.map { case (a, d) => (a, s"msg$d") }).toDF("account", "id")
+      val df = fetchRead(ext).join(local, Seq("account", "id"), "left_anti")
+      assert(joins(df) === 0, df.queryExecution.optimizedPlan.treeString)
+      assert(df.queryExecution.executedPlan.toString.contains(s"known=${landed.size}"))
+      assert(accountDocs(df.collect()) === want)
+    } finally {
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      prevDefault.foreach(SparkSession.setDefaultSession)
+      prevActive.foreach(SparkSession.setActiveSession)
+    }
+  }
+
+  test("the write reports inserted rows, sink batches and failed batches as metrics") {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      MailSink.clear("t_wmetrics")
+      // one writer task of 250 rows in batches of 100: the first batch
+      // holds the poison id and is rejected, the next two land
+      mail(250).withColumn("id", when($"doc_id" === 42, lit("poison42")).otherwise($"id"))
+        .write.format(provider).option("sink", "t_wmetrics").option("batchSize", 100)
+        .mode("append").save()
+      org.apache.spark.SpecBus.drain(spark.sparkContext)
+      val w = plans.asScala.flatMap(_.executedPlan.collectFirst { case w: V2TableWriteExec => w }).head
+      assert(MailSink.inserted("t_wmetrics").size === 150)
+      assert(w.metrics("insertedRows").value === 150)
+      assert(w.metrics("sinkBatches").value === 3)
+      assert(w.metrics("failedBatches").value === 1)
+    } finally spark.listenerManager.unregister(l)
   }
 
   test("connector queries match their row counts at fixture scale") {
